@@ -88,6 +88,9 @@ SF1_TAIL = [
     # sf1 wall + records on record. Every pairing stage inside it is
     # blocked/capped (minhash bands, semantic hot-cell cap).
     "pipeline_llm_corpus_packed",
+    # the duplicated-n-gram NumPy kernel (one call per Arrow batch after
+    # a spread step) — map-only, so its records must stay input-linear
+    "text_dup_ngram_stats",
 ]
 
 # BLOCKED-class queries (tests/test_scale_records.py) carry an extra

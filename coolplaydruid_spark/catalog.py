@@ -45,6 +45,9 @@ class DataSource:
     dimensions: list[str] | None = None
     metrics: list[str] | None = None
     options: dict[str, str] = field(default_factory=dict)
+    # Files + mtimes under ``path`` as listed when the frame was loaded
+    # (see Catalog.table); None until then, or for frame-backed sources.
+    fingerprint: str | None = None
 
     def load(self, spark: SparkSession) -> DataFrame:
         reader = spark.read
@@ -71,6 +74,26 @@ class DataSource:
         if self.time_column and self.time_column in df.columns:
             df = df.withColumn(TIME_COLUMN, F.col(self.time_column))
         return df
+
+
+def _file_fingerprint(path: str) -> str | None:
+    """md5 over every file under ``path`` with its mtime (the Spark
+    analogue of Druid's segment versions); None if the path is gone."""
+    import hashlib
+    import os
+
+    h = hashlib.md5()
+    try:
+        if os.path.isdir(path):
+            for root, _, files in os.walk(path):
+                for f in sorted(files):
+                    p = os.path.join(root, f)
+                    h.update(f"{p}:{os.path.getmtime(p)}".encode())
+        else:
+            h.update(f"{path}:{os.path.getmtime(path)}".encode())
+    except OSError:
+        return None
+    return h.hexdigest()
 
 
 def _nano_timestamp_columns(path: str) -> list[str]:
@@ -200,9 +223,25 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name in self._frames:
             return self._frames[name]
-        df = self.source(name).load(self.spark)
+        source = self.source(name)
+        if source.path:
+            # Listed BEFORE the frame lists its files: a file landing in
+            # between is read under the older fingerprint, and the next
+            # registration re-keys it — never the other way round, which
+            # would cache an old read under a key claiming the new file.
+            source.fingerprint = _file_fingerprint(source.path)
+        df = source.load(self.spark)
         self._frames[name] = df
         return df
+
+    def fingerprint(self, name: str) -> str | None:
+        """The file fingerprint of the data ``table(name)`` reads. It is
+        taken once, when the frame is loaded (at registration for views),
+        so it changes when ingest re-registers the table — not when files
+        change underneath a registered frame, which keeps reading the
+        listing it was built from."""
+        self.table(name)
+        return self.source(name).fingerprint
 
     def resolve(self, datasource) -> DataFrame:
         """Resolve a Druid dataSource spec to a DataFrame.

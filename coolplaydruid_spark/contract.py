@@ -2889,7 +2889,7 @@ def _duck_minhash_pair_ctes(threshold: float, num_hashes: int = 12,
         capped = ""
         band_src = "banded"
     else:
-        # mirror of operators/dedup._drop_hot_keys: buckets holding more
+        # mirror of operators/dedup._blocked_pairs' cap: buckets holding more
         # than the cap are excluded from candidate generation entirely.
         # Formulated as a window count rather than a hot-set NOT EXISTS
         # (value-identical, asserted in tests): the two-CTE NOT EXISTS

@@ -62,8 +62,10 @@ class DruidEngine:
         self.spark = spark
         self.catalog = catalog or Catalog(spark)
         # ETag-keyed result cache (see execute()); plain FIFO bound —
-        # entries are invalidated by key churn, not eviction policy.
+        # entries are invalidated by key churn, not eviction policy. The
+        # lock makes evict+insert atomic across handler threads.
         self._result_cache: dict[str, list] = {}
+        self._result_cache_lock = threading.Lock()
         self._result_cache_max = result_cache_entries
         self._rollups: list[RollupSpec] = []
         # Per-query metrics ring buffer — the analogue of the reference's
@@ -265,11 +267,11 @@ class DruidEngine:
         # Result cache (context.useCache / populateCache, both default
         # true in Druid; the reference's caching/ETag machinery is
         # query/query-internal-procedure.md:41-47). Keyed by the ETag —
-        # canonical query + source files + mtimes — so any segment
-        # change mints a new key and stale entries simply stop being
-        # referenced. Entries hold serialized results (aggregation-sized);
-        # scan/select are never cached (Druid likewise only caches
-        # per-segment aggregates).
+        # canonical query + the registered frame's file fingerprint — so
+        # a re-registration after ingest mints a new key and stale
+        # entries simply stop being referenced. Entries hold serialized
+        # results (aggregation-sized); scan/select are never cached
+        # (Druid likewise only caches per-segment aggregates).
         cacheable = query.get("queryType") not in ("scan", "select")
         cache_key = None
         if cacheable and (context.get("useCache", True) or context.get("populateCache", True)):
@@ -339,9 +341,10 @@ class DruidEngine:
                 raise QueryTimeoutError()
             result = self.serialize(query, rows)
             if cache_key and context.get("populateCache", True):
-                if len(self._result_cache) >= self._result_cache_max:
-                    self._result_cache.pop(next(iter(self._result_cache)))
-                self._result_cache[cache_key] = result
+                with self._result_cache_lock:
+                    if len(self._result_cache) >= self._result_cache_max:
+                        self._result_cache.pop(next(iter(self._result_cache)))
+                    self._result_cache[cache_key] = result
             self._emit_metrics(query, query_id, t0, success=True, rows=len(result))
             return result
         except DruidQueryError as e:
@@ -430,11 +433,11 @@ class DruidEngine:
     def etag(self, query: dict) -> str | None:
         """ETag for If-None-Match caching
         (query/query-internal-procedure.md:41-47): hash of the canonical
-        query + the referenced dataSource's files and mtimes (the Spark
-        analogue of Druid's per-segment-version cache key). None when the
-        dataSource isn't a plain registered table."""
+        query + the fingerprint of the files the registered frame reads
+        (Catalog.fingerprint — the Spark analogue of Druid's
+        per-segment-version cache key). None when the dataSource isn't a
+        plain registered table."""
         import hashlib
-        import os
 
         ds = query.get("dataSource")
         if isinstance(ds, dict):
@@ -442,23 +445,13 @@ class DruidEngine:
         if not isinstance(ds, str):
             return None
         try:
-            source = self.catalog.source(ds)
+            fingerprint = self.catalog.fingerprint(ds)
         except KeyError:
             return None
-        if not source.path:
+        if fingerprint is None:
             return None
         h = hashlib.md5(json.dumps(query, sort_keys=True, default=str).encode())
-        path = source.path
-        try:
-            if os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    for f in sorted(files):
-                        p = os.path.join(root, f)
-                        h.update(f"{p}:{os.path.getmtime(p)}".encode())
-            else:
-                h.update(f"{path}:{os.path.getmtime(path)}".encode())
-        except OSError:
-            return None
+        h.update(fingerprint.encode())
         return f'"{h.hexdigest()}"'
 
     # ---- result shaping -------------------------------------------------

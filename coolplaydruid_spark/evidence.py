@@ -52,7 +52,8 @@ _SINK: list | None = None
 
 
 def record_blocking(label: str, left: DataFrame, keys: list[str],
-                    right: DataFrame | None = None) -> None:
+                    right: DataFrame | None = None,
+                    weight: str | None = None) -> None:
     """Record a blocked pair join's pre-join input(s).
 
     ``left``/``right`` must be the tables AS JOINED (after hot-key caps,
@@ -61,12 +62,16 @@ def record_blocking(label: str, left: DataFrame, keys: list[str],
     global block, the unblocked test-scale embedding form).
     ``right=None`` declares a self-join with an ``id <`` ordering
     predicate (C(n,2) candidates per bucket); otherwise the two sides
-    cross within each bucket (n_l × n_r). No-op unless a capture() is
+    cross within each bucket (n_l × n_r). ``weight`` names a column
+    holding how many items each row stands for (a representative of a
+    group of identical signatures); n is then the sum of weights, so
+    the counts are what per-item blocking would enumerate — the join
+    strategy (grouping) does not move them. No-op unless a capture() is
     active — the check is one module-global read, so operators call
     this unconditionally on the hot construction path. When active, the
     counts run as Spark jobs HERE (see module docstring on why eager)."""
     if _SINK is not None:
-        _SINK.append(_block_stats(label, left, keys, right))
+        _SINK.append(_block_stats(label, left, keys, right, weight))
 
 
 @contextmanager
@@ -84,22 +89,23 @@ def capture():
 
 
 def _block_stats(label: str, left: DataFrame, keys: list[str],
-                 right: DataFrame | None) -> dict:
+                 right: DataFrame | None, weight: str | None) -> dict:
     """Exact candidate-pair and input-row counts for one blocking —
     one groupBy-count over each pre-join table, far cheaper than the
     pairing query itself."""
+    n = F.count(F.lit(1)) if weight is None else F.sum(weight)
     gb_l = left.groupBy(*[F.col(k) for k in keys])
     if right is None:
-        agg = gb_l.agg(F.count(F.lit(1)).cast("long").alias("n"))
+        agg = gb_l.agg(n.cast("long").alias("n"))
         row = agg.agg(
             F.sum(F.expr("n * (n - 1) DIV 2")).alias("p"),
             F.sum("n").alias("r"),
         ).collect()[0]
         pairs, rows = int(row["p"] or 0), int(row["r"] or 0)
     else:
-        ln = gb_l.agg(F.count(F.lit(1)).cast("long").alias("__nl"))
+        ln = gb_l.agg(n.cast("long").alias("__nl"))
         rn = right.groupBy(*[F.col(k) for k in keys]).agg(
-            F.count(F.lit(1)).cast("long").alias("__nr"))
+            n.cast("long").alias("__nr"))
         joined = ln.join(rn, on=keys) if keys else ln.crossJoin(rn)
         row = joined.agg(F.sum(F.expr("__nl * __nr")).alias("p")).collect()[0]
         pairs = int(row["p"] or 0)

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark import evidence
 from coolplaydruid_spark.operators.text import tokens
 from coolplaydruid_spark.operators.util import spread
 
@@ -285,7 +284,8 @@ def source_overlap_matrix(
     after the distinct), so the pair stream is ≤ vocab · groups²/2 —
     no stop-shingle cap needed, unlike document-level candidate
     joins."""
-    from coolplaydruid_spark.operators.dedup import _pin_cache, shingles
+    from coolplaydruid_spark.operators.dedup import (
+        _blocked_pairs, _pin_cache, shingles)
 
     # group_col rides through the shingle projection (extra_cols), so
     # no doc-keyed re-join of the shingle stream is needed — the one
@@ -299,19 +299,16 @@ def source_overlap_matrix(
     # scan→Generate→distinct subtree planned at 4 roots, zero reuse).
     # grp_sh is the documented vocab×groups reduction (never
     # corpus-scaled); sizes is one row per group.
-    grp_sh = _pin_cache(
-        sh.select(F.col(group_col).alias("__grp"), "shingle")
-        .distinct()
-    )
+    blocks = _blocked_pairs(
+        "overlap_shingle_groups",
+        sh.select(F.col(group_col).alias("__grp"), "shingle").distinct(),
+        ["shingle"], "__grp", pin=True)
     sizes = _pin_cache(
-        grp_sh.groupBy("__grp").agg(F.count(F.lit(1)).alias("__n")))
-    evidence.record_blocking("overlap_shingle_groups", grp_sh, ["shingle"])
-    a = grp_sh.select(F.col("__grp").alias("group_a"), "shingle")
-    b = grp_sh.select(F.col("__grp").alias("group_b"), "shingle")
+        blocks.left.groupBy("__grp").agg(F.count(F.lit(1)).alias("__n")))
     shared = (
-        a.join(b, on="shingle")
-        .where(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
+        blocks.join()
+        .groupBy(F.col("l.__grp").alias("group_a"),
+                 F.col("r.__grp").alias("group_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
     na = sizes.select(F.col("__grp").alias("group_a"), F.col("__n").alias("__na"))
@@ -357,7 +354,7 @@ def source_overlap_incremental(
     shingle-keyed join is bounded per key by group counts on each side
     (≤ corpus_groups × batch_groups rows per shingle), so no stop-cap
     is needed."""
-    from coolplaydruid_spark.operators.dedup import _pin_cache, shingles
+    from coolplaydruid_spark.operators.dedup import _blocked_pairs, shingles
 
     if corpus_group_shingles is not None:
         # r9 verdict: a non-distinct pre-materialized table silently
@@ -367,12 +364,12 @@ def source_overlap_incremental(
         # already distinct-by-construction — so the documented contract
         # is now enforced instead of trusted.
         corpus_sh = corpus_group_shingles.select(
-            F.col(group_col).alias("group_a"), "shingle").distinct()
+            F.col(group_col).alias("__grp"), "shingle").distinct()
     elif corpus_df is not None:
         corpus_sh = (
             shingles(corpus_df, k=k, text_col=text_col, id_col=id_col,
                      extra_cols=[group_col])
-            .select(F.col(group_col).alias("group_a"), "shingle")
+            .select(F.col(group_col).alias("__grp"), "shingle")
             .distinct()
         )
     else:
@@ -380,24 +377,25 @@ def source_overlap_incremental(
     batch_sh = (
         shingles(batch_df, k=k, text_col=text_col, id_col=id_col,
                  extra_cols=[group_col])
-        .select(F.col(group_col).alias("group_b"), "shingle")
+        .select(F.col(group_col).alias("__grp"), "shingle")
         .distinct()
     )
     # r14: both sides feed the shared join AND their own size
     # aggregation — pin each (vocab×groups-scaled) so the distinct
     # reductions run once instead of twice per side (same plan audit as
     # source_overlap_matrix).
-    corpus_sh = _pin_cache(corpus_sh)
-    batch_sh = _pin_cache(batch_sh)
-    evidence.record_blocking("overlap_shingle_cross", corpus_sh, ["shingle"],
-                             right=batch_sh)
+    blocks = _blocked_pairs("overlap_shingle_cross", corpus_sh, ["shingle"],
+                            "__grp", right=batch_sh, pin=True)
     shared = (
-        corpus_sh.join(batch_sh, on="shingle")
-        .groupBy("group_a", "group_b")
+        blocks.join()
+        .groupBy(F.col("l.__grp").alias("group_a"),
+                 F.col("r.__grp").alias("group_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
-    na = corpus_sh.groupBy("group_a").agg(F.count(F.lit(1)).alias("__na"))
-    nb = batch_sh.groupBy("group_b").agg(F.count(F.lit(1)).alias("__nb"))
+    na = blocks.left.groupBy(F.col("__grp").alias("group_a")).agg(
+        F.count(F.lit(1)).alias("__na"))
+    nb = blocks.right.groupBy(F.col("__grp").alias("group_b")).agg(
+        F.count(F.lit(1)).alias("__nb"))
     return (
         shared.join(F.broadcast(na), on="group_a")
         .join(F.broadcast(nb), on="group_b")

@@ -23,6 +23,10 @@ Spark and DuckDB, so every operator has an exact SQL oracle.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -280,65 +284,110 @@ def release_caches() -> None:
             pass
 
 
-def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int | None,
-                   persist: bool = False,
-                   repartition: bool = False) -> DataFrame:
-    """Drop rows whose ``keys`` group holds more than ``cap`` rows —
-    the shared hot-key guard behind both stop-shingles
-    (ngram_jaccard_pairs) and LSH band-bucket caps.
+class _Blocks(NamedTuple):
+    """The prepared sides of a blocked pair join (see _blocked_pairs).
+    ``right`` is None for the self form."""
+    left: DataFrame
+    right: DataFrame | None
+    keys: list[str]
+    id_col: str
 
-    The hot-key set is small by construction (≤ total rows / cap), so
-    the anti-join broadcasts it. ``persist=True`` materializes ``df``
-    once so the frequency count and the anti-join share one
-    computation instead of re-running the upstream lineage (worth it
-    when that lineage is the expensive part, as with minhash banding;
-    the pin is bounded by the _pin_cache FIFO and releasable via
-    release_caches()).
-
-    ``repartition=True`` hash-partitions ``df`` by ``keys`` FIRST, so
-    every downstream key-aligned operation — the frequency groupBy
-    here, and the caller's key-equi self-join — runs exchange-free on
-    that one partitioning (the broadcast anti-join preserves it).
-    Without it, the anti-join output has no runtime size stats, the
-    self-join can't plan as a broadcast, and the banded table crosses
-    the wire once per consumer (measured 6× at sf1 before this)."""
-    if cap is None:
-        return df
-    if repartition:
-        df = df.repartition(*[F.col(k) for k in keys])
-    if persist:
-        df = _pin_cache(df)
-    hot = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__hot_n"))
-        .where(F.col("__hot_n") > int(cap))
-        .select(*keys)
-    )
-    return df.join(F.broadcast(hot), on=keys, how="left_anti")
+    def join(self) -> DataFrame:
+        """The equi-join on the bucket keys, sides aliased ``l`` and
+        ``r``; the self form adds ``l.id < r.id`` so each unordered
+        pair is enumerated once per shared bucket."""
+        l = self.left.alias("l")
+        r = (self.left if self.right is None else self.right).alias("r")
+        conds = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in self.keys]
+        if self.right is None:
+            conds.append(F.col(f"l.{self.id_col}") < F.col(f"r.{self.id_col}"))
+        return l.join(r, reduce(operator.and_, conds) if conds else None)
 
 
-def _cap_band_buckets(banded: DataFrame, max_band_bucket: int | None) -> DataFrame:
-    """Drop LSH buckets holding more than ``max_band_bucket`` documents
-    BEFORE the candidate join — the band-bucket analogue of
-    ngram_jaccard_pairs' ``max_shingle_freq`` stop-shingle cap.
+def _blocked_pairs(label: str, left: DataFrame, keys: list[str], id_col: str,
+                   right: DataFrame | None = None, cap: int | None = None,
+                   pin: bool = False, check_disjoint: bool = False,
+                   weight: str | None = None) -> _Blocks:
+    """The one blocked-pair primitive under every pairing family
+    (MinHash bands, banded Hamming, co-key set Jaccard, embedding
+    blocks and cells, corpus source overlap). Items that share a bucket
+    (``keys``) are paired; nothing else ever meets, so the join is never
+    O(n²). ``right=None`` is the self form (``left`` pairs with itself,
+    ``l.id < r.id``); otherwise LEFT is the corpus and RIGHT the batch —
+    the daily-ingest shape where the corpus never self-joins.
 
-    A (band, band-hash) bucket of d documents emits O(d²) candidate
-    pairs, so one pathological bucket (mass-duplicated boilerplate, or
-    an adversarial corpus engineered to collide) degenerates the
-    blocked self-join toward all-pairs. Capping bounds the join at
-    bands × cap² pairs per bucket regardless of corpus shape. Docs in a
-    dropped bucket can still pair through their other bands (near-dups
-    collide in several bands with high probability); the one shape that
-    loses ALL its bands is exact duplicates — which the pipeline's
-    exact/digest dedup stage catches upstream for O(n) instead.
+    ``check_disjoint`` (cross form): the sides' ids must be unique
+    across the union (the standard corpus invariant), or an item
+    present on both sides pairs with itself and is "deduplicated"
+    against itself, and per-id size unions fan out. The probe is one
+    eager limit-3 semi-join action that raises on violation; it is off
+    by default because production callers that partition batches by
+    ingest time satisfy the invariant by construction.
 
-    The banded table (one id+band+hash row per doc per band) is
-    hash-partitioned on (band, bh) and persisted: ~bands×|docs| rows —
-    negligible next to the shingle set — cross the wire ONCE, and the
-    bucket count, the anti-join, and the caller's banded self-join all
-    run on that partitioning without further exchanges."""
-    return _drop_hot_keys(banded, ["band", "bh"], max_band_bucket,
-                          persist=True, repartition=True)
+    ``cap``: drop buckets holding more than ``cap`` rows BEFORE the
+    join. A bucket of d items emits O(d²) candidates, so one
+    pathological bucket (mass-duplicated boilerplate, or an adversarial
+    corpus engineered to collide) degenerates the join toward
+    all-pairs; the cap bounds it at cap² pairs per bucket. Items of a
+    dropped bucket can still pair through their other buckets
+    (near-dups collide in several bands with high probability); the
+    shape that loses every bucket is exact duplicates, which the
+    upstream digest-dedup stage catches in O(n). Members of a dropped
+    bucket emit no pairs, so for dedup they are conservatively KEPT.
+    The hot-key set is small by construction (≤ rows / cap), so the
+    anti-join broadcasts it.
+     - Self form: ``left`` is hash-partitioned on ``keys`` and pinned
+       first, so the bucket count, the anti-join and both join sides
+       run exchange-free on one partitioning from one materialization
+       of the upstream lineage (without it the anti-join output has no
+       runtime size stats, the self-join cannot plan as a broadcast and
+       the bucketed table crossed the wire once per consumer — measured
+       6× at sf1).
+     - Cross form: buckets are counted on the CORPUS side (the
+       unbounded one) and dropped from BOTH sides, so a batch row never
+       pairs into a bucket the corpus no longer exposes and per-id set
+       sizes exclude the same keys on both sides (a one-sided drop
+       deflated every batch-side Jaccard denominator).
+
+    ``pin`` pins each side through the bounded _pin_cache FIFO
+    (releasable via release_caches()) — worth it when the sides feed
+    more consumers than the join (set sizes, Arrow kernels) and the
+    lineage above is expensive. The capped self form is pinned anyway.
+
+    The sides AS JOINED are recorded with evidence.record_blocking;
+    ``weight`` names a column counting how many items a row stands for
+    (grouped representatives), so the evidence stays per item.
+
+    Returns the prepared sides; ``.join()`` is the bucket equi-join the
+    JVM paths consume, the Arrow kernels take the sides directly."""
+    if check_disjoint and right is not None:
+        overlap = (
+            left.select(F.col(id_col)).distinct()
+            .join(right.select(F.col(id_col)), on=id_col, how="left_semi")
+            .limit(3)
+            .collect()
+        )
+        if overlap:
+            raise ValueError(
+                f"{label}: ids appear on BOTH sides "
+                f"(e.g. {[r[id_col] for r in overlap]}) — corpus and batch "
+                "ids must be disjoint or items self-pair as duplicates")
+    if cap is not None and right is None:
+        left = _pin_cache(left.repartition(*[F.col(k) for k in keys]))
+    elif pin:
+        left = _pin_cache(left)
+        right = None if right is None else _pin_cache(right)
+    if cap is not None:
+        hot = F.broadcast(
+            left.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__hot_n")).where(F.col("__hot_n") > int(cap))
+            .select(*keys)
+        )
+        left = left.join(hot, on=keys, how="left_anti")
+        if right is not None:
+            right = right.join(hot, on=keys, how="left_anti")
+    evidence.record_blocking(label, left, keys, right=right, weight=weight)
+    return _Blocks(left, right, keys, id_col)
 
 
 def minhash_lsh_dedup(
@@ -364,7 +413,7 @@ def minhash_lsh_dedup(
     probability, not corpus size — *statistically*. A corpus with
     mass-duplicated boilerplate can still blow one bucket quadratic;
     ``max_band_bucket`` hard-bounds that by dropping buckets larger
-    than the cap before the join (see _cap_band_buckets for the recall
+    than the cap before the join (see _blocked_pairs for the recall
     trade). The exact-verify join touches only candidate pairs'
     shingle sets.
     """
@@ -392,18 +441,10 @@ def minhash_lsh_dedup(
         # set) collapses them to a single aggregation pass.
         sig = _pin_cache(sig)
     banded = band_hashes(sig, num_hashes=num_hashes, bands=bands, id_col=id_col)
-    banded = _cap_band_buckets(banded, max_band_bucket)
-    evidence.record_blocking("minhash_lsh_bands", banded, ["band", "bh"])
-
-    left = banded.alias("l")
-    right = banded.alias("r")
     candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        _blocked_pairs("minhash_lsh_bands", banded, ["band", "bh"], id_col,
+                       cap=max_band_bucket)
+        .join()
         .select(F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b"))
         .distinct()
     )
@@ -445,10 +486,9 @@ def minhash_lsh_dedup_incremental(
     once at accept time (it is a pure function of the text) and only
     the new side computed per batch: pass it as ``corpus_shingles``
     ((id, shingle-hash) rows as produced by shingles(as_hash=True)) and
-    ``corpus_df`` is not consulted at all. ``max_band_bucket`` drops
-    over-cap CORPUS-side LSH buckets before the join (see
-    _cap_band_buckets) — the batch side is ingest-bounded and stays
-    uncapped."""
+    ``corpus_df`` is not consulted at all. ``max_band_bucket`` caps
+    LSH buckets counted on the CORPUS side (_blocked_pairs' cross
+    form)."""
     sh_new = shingles(new_df, k=k, text_col=text_col, id_col=id_col, as_hash=True)
     if corpus_shingles is not None:
         # Same guard as corpus.source_overlap_incremental (r10): a
@@ -486,19 +526,11 @@ def minhash_lsh_dedup_incremental(
     banded_corpus = band_hashes(
         sig_corpus, num_hashes=num_hashes, bands=bands, id_col=id_col
     )
-    # Cap only the corpus side: the new batch is bounded by ingest, the
-    # corpus is not — a corpus bucket of c docs costs c × batch-hits
-    # pairs, and dropping the corpus rows of a hot bucket zeroes the
-    # bucket's join output entirely.
-    banded_corpus = _cap_band_buckets(banded_corpus, max_band_bucket)
-    evidence.record_blocking("minhash_lsh_bands_incremental", banded_corpus,
-                             ["band", "bh"], right=banded_new)
     candidates = (
-        banded_corpus.alias("l")
-        .join(
-            banded_new.alias("r"),
-            (F.col("l.band") == F.col("r.band")) & (F.col("l.bh") == F.col("r.bh")),
-        )
+        _blocked_pairs("minhash_lsh_bands_incremental", banded_corpus,
+                       ["band", "bh"], id_col, right=banded_new,
+                       cap=max_band_bucket)
+        .join()
         .select(F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b"))
         .distinct()
     )
@@ -572,87 +604,40 @@ def set_jaccard_pairs(sets: DataFrame, key_col: str, id_col: str,
     (out_a, out_b, jaccard ≥ threshold).
 
     ``sets_right``: batch × corpus pairing (corpus = ``sets``, never
-    self-joined; ids must be unique across the union —
-    ``check_disjoint=True`` verifies eagerly and raises, same contract
-    as banded_hamming_pairs). Hot keys are counted on the CORPUS side
-    (the unbounded one) but dropped from BOTH sides, so intersection
-    and both set sizes exclude the same keys and the measure stays
-    self-consistent (r10 review: a one-sided drop deflated every
-    batch-side denominator, silently missing exact duplicates).
+    self-joined). ``max_key_freq`` and ``check_disjoint`` are
+    _blocked_pairs' ``cap`` and ``check_disjoint``; the cross form's
+    two-sided cap keeps intersection and both set sizes over the same
+    keys, so the measure stays self-consistent.
 
     ``distinct=False`` declares the input already distinct per id
     (shingles() guarantees it), skipping one shuffle. ``persist=True``
-    pins the (distinct, capped) key sets via the bounded _pin_cache —
-    worth it when the lineage above is expensive (a Python media-decode
-    stage feeds the join twice and the sizes aggregate once)."""
+    pins the distinct key sets via the bounded _pin_cache — worth it
+    when the lineage above is expensive (a Python media-decode stage
+    feeds the join twice and the sizes aggregate once)."""
     left = sets.select(F.col(id_col), F.col(key_col))
     if distinct:
         left = left.distinct()
-    if sets_right is None:
-        left = _drop_hot_keys(left, [key_col], max_key_freq)
-        if persist:
-            left = _pin_cache(left)
-        evidence.record_blocking("set_jaccard_cokey", left, [key_col])
-        a, b = left.alias("a"), left.alias("b")
-        co = (
-            a.join(
-                b,
-                (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        sizes = left.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    else:
+    right = None
+    if sets_right is not None:
         right = sets_right.select(F.col(id_col), F.col(key_col))
         if distinct:
             right = right.distinct()
-        if check_disjoint:
-            overlap = (
-                left.select(F.col(id_col))
-                .join(right.select(F.col(id_col)), on=id_col, how="left_semi")
-                .limit(3)
-                .collect()
-            )
-            if overlap:
-                raise ValueError(
-                    "set_jaccard_pairs: ids appear on BOTH sides "
-                    f"(e.g. {[r[id_col] for r in overlap]}) — corpus and "
-                    "batch ids must be disjoint or items self-pair and "
-                    "the sizes union fans out")
-        if max_key_freq is not None:
-            hot = (
-                left.groupBy(key_col)
-                .agg(F.count(F.lit(1)).alias("__hot_n"))
-                .where(F.col("__hot_n") > int(max_key_freq))
-                .select(key_col)
-            )
-            left = left.join(F.broadcast(hot), on=key_col, how="left_anti")
-            right = right.join(F.broadcast(hot), on=key_col, how="left_anti")
-        if persist:
-            left = _pin_cache(left)
-            right = _pin_cache(right)
-        evidence.record_blocking("set_jaccard_cokey_cross", left, [key_col],
-                                 right=right)
-        co = (
-            left.alias("a")
-            .join(right.alias("b"),
-                  F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-            .groupBy(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
+    blocks = _blocked_pairs(
+        "set_jaccard_cokey" if right is None else "set_jaccard_cokey_cross",
+        left, [key_col], id_col, right=right, cap=max_key_freq, pin=persist,
+        check_disjoint=check_disjoint)
+    co = (
+        blocks.join()
+        .groupBy(
+            F.col(f"l.{id_col}").alias("doc_a"),
+            F.col(f"r.{id_col}").alias("doc_b"),
         )
-        sizes = left.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_shingles")
-        ).union(
-            right.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sizes = blocks.left.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    if blocks.right is not None:
+        sizes = sizes.union(
+            blocks.right.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")))
     out = _attach_sizes_and_score(co, sizes, threshold, id_col)
     if (out_a, out_b) != ("doc_a", "doc_b"):
         out = out.select(
@@ -852,57 +837,27 @@ def banded_hamming_pairs(sig: DataFrame, band_cols: list, sig_cols: list[str],
     guarantee is unchanged: both sides band identically, so any
     cross pair within the threshold still collides in ≥ 1 band.
 
-    ``check_disjoint=True`` VERIFIES the ids-unique-across-sides
-    invariant eagerly (a semi-join probe, one action) and raises on
-    violation — an item present on both sides would otherwise emit a
-    Hamming-0 self-pair and get "deduplicated" against itself (r9
-    verdict #3: the contract was documented but nothing enforced it).
-    Off by default: the probe costs an extra job, and production
-    callers that partition batches by ingest time satisfy the
-    invariant by construction.
-
-    ``max_band_bucket`` (r14): drop (band, bits) buckets holding more
-    rows BEFORE the join — the banded-Hamming member of the hot-key
-    caps every other pairing family carries (minhash max_band_bucket,
-    set_jaccard max_key_freq, embedding max_block_size). Uncapped, the
-    blocked result is EXACTLY the all-pairs result under the pigeonhole
-    bound — but candidate volume is then bounded only by real band
-    collisions, and a boilerplate-heavy corpus concentrates them:
-    the r14 sf1 media fixture produced 670M candidate pairs from 400k
-    banded rows (hot 8-bit buckets), verified down to 21k. The cap
-    bounds the join at cap² pairs per bucket and COSTS RECALL only for
-    pairs whose every agreeing band is hot (near-identical items also
-    agree in other bands with high probability; exact duplicates —
-    which lose all bands — are the upstream digest-dedup stage's O(n)
-    job, the same argument as minhash's cap). Cross-join form: buckets
-    are counted on the CORPUS side (the unbounded one) and dropped
-    from BOTH sides, the two-sided discipline of set_jaccard_pairs.
-    Members of a dropped bucket are conservatively KEPT (emit no
-    pairs). Default off — the SQL-oracled entries stay exact.
+    ``check_disjoint`` and ``max_band_bucket`` are _blocked_pairs'
+    probe and cap. Uncapped, the blocked result is EXACTLY the
+    all-pairs result under the pigeonhole bound — but candidate volume
+    is then bounded only by real band collisions, and a
+    boilerplate-heavy corpus concentrates them: the r14 sf1 media
+    fixture produced 670M candidate pairs from 400k banded rows (hot
+    8-bit buckets), verified down to 21k. The cap COSTS RECALL only for
+    pairs whose every agreeing band is hot. Default off — the
+    SQL-oracled entries stay exact.
 
     ``persist=False`` (r15 advice: internal persistence is now
     opt-out-able) skips the uncapped self-join's signature pin and
     accepts re-running the upstream lineage once per join side; the
     pin is otherwise bounded by the _pin_cache FIFO and releasable via
     release_caches()."""
-    if check_disjoint and sig_right is not None:
-        overlap = (
-            sig.select(F.col(id_col))
-            .join(sig_right.select(F.col(id_col)), on=id_col, how="left_semi")
-            .limit(3)
-            .collect()
-        )
-        if overlap:
-            raise ValueError(
-                "banded_hamming_pairs: ids appear on BOTH sides "
-                f"(e.g. {[r[id_col] for r in overlap]}) — corpus and batch "
-                "ids must be disjoint or items self-pair as duplicates")
-
-    def bandify(frame):
+    def bandify(frame, *extra):
+        cols = [id_col, *sig_cols, *extra]
         return frame.select(
-            F.col(id_col), *[F.col(c) for c in sig_cols],
+            *[F.col(c) for c in cols],
             F.explode(F.array(*band_cols)).alias("b"),
-        ).select(id_col, *sig_cols, "b.band", "b.bits")
+        ).select(*cols, "b.band", "b.bits")
 
     if sig_right is None and max_band_bucket is None:
         # r15 (guide §8 — decide on a lightweight proxy, expand once):
@@ -934,7 +889,10 @@ def banded_hamming_pairs(sig: DataFrame, band_cols: list, sig_cols: list[str],
         )
         if persist:
             groups = _pin_cache(groups)
-        reps = groups.select(F.col(id_col), *[F.col(c) for c in sig_cols])
+        # __w: members per representative, so the recorded candidate
+        # volume is what per-item blocking would enumerate
+        reps = groups.select(F.col(id_col), *[F.col(c) for c in sig_cols],
+                             F.size("__members").alias("__w"))
         # Two-band composite keys (pigeonhole-exact for
         # h ≤ bands − 2) were measured and REJECTED: 665M → 162M
         # enumerated rep candidates at sf1, but the 3.5× larger banded
@@ -942,13 +900,10 @@ def banded_hamming_pairs(sig: DataFrame, band_cols: list, sig_cols: list[str],
         # enumeration saved (interleaved A/B: 11.6 s vs 8.9 s) — with
         # the hamming filter ahead of the distinct, enumeration is a
         # cheap codegen inner loop that never shuffles.
-        lb = bandify(reps)
-        evidence.record_blocking("banded_hamming", lb, ["band", "bits"])
-        l, r = lb.alias("l"), lb.alias("r")
         rep_pairs = (
-            l.join(r, (F.col("l.band") == F.col("r.band"))
-                   & (F.col("l.bits") == F.col("r.bits"))
-                   & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+            _blocked_pairs("banded_hamming", bandify(reps, "__w"),
+                           ["band", "bits"], id_col, weight="__w")
+            .join()
             .select(
                 F.col(f"l.{id_col}").alias("__ra"),
                 F.col(f"r.{id_col}").alias("__rb"),
@@ -996,35 +951,12 @@ def banded_hamming_pairs(sig: DataFrame, band_cols: list, sig_cols: list[str],
             .where(F.lit(0) <= int(max_hamming))
         )
         return cross.unionByName(within)
-    lb = bandify(sig)
-    rb = bandify(sig_right) if sig_right is not None else None
-    if max_band_bucket is not None:
-        if rb is None:
-            # persist+repartition: the capped banded table feeds the
-            # bucket count AND both join sides on one (band, bits)
-            # partitioning — same shape as minhash's _cap_band_buckets
-            lb = _drop_hot_keys(lb, ["band", "bits"], max_band_bucket,
-                                persist=True, repartition=True)
-        else:
-            hot = (
-                lb.groupBy("band", "bits")
-                .agg(F.count(F.lit(1)).alias("__hot_n"))
-                .where(F.col("__hot_n") > int(max_band_bucket))
-                .select("band", "bits")
-            )
-            lb = lb.join(F.broadcast(hot), on=["band", "bits"],
-                         how="left_anti")
-            rb = rb.join(F.broadcast(hot), on=["band", "bits"],
-                         how="left_anti")
-    evidence.record_blocking("banded_hamming", lb, ["band", "bits"], right=rb)
-    l = lb.alias("l")
-    r = (rb if rb is not None else lb).alias("r")
-    cond = (F.col("l.band") == F.col("r.band")) & (
-        F.col("l.bits") == F.col("r.bits"))
-    if sig_right is None:
-        cond = cond & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    blocks = _blocked_pairs(
+        "banded_hamming", bandify(sig), ["band", "bits"], id_col,
+        right=None if sig_right is None else bandify(sig_right),
+        cap=max_band_bucket, check_disjoint=check_disjoint)
     return (
-        l.join(r, cond)
+        blocks.join()
         .select(
             F.col(f"l.{id_col}").alias(out_a),
             F.col(f"r.{id_col}").alias(out_b),
@@ -1255,12 +1187,11 @@ def _pairs_arrow_self(base: DataFrame, threshold: float, vec_col: str,
 
 
 def _pairs_arrow_cross(c: DataFrame, b: DataFrame, threshold: float,
-                       id_type: str) -> DataFrame:
+                       id_col: str, id_type: str) -> DataFrame:
     """Cross (corpus × batch) within-cell pairing as one gemm per cell
     via cogrouped applyInPandas — the incremental counterpart of
     _pairs_arrow_self, same mask-then-exact-recompute discipline.
-    Inputs are the prep() frames (id_a/__va/__na/__cell and
-    id_b/__vb/__nb/__cell)."""
+    Inputs are the prep() frames (id_col/__v/__n/__cell)."""
     import pandas as pd
 
     thr = float(threshold)
@@ -1275,8 +1206,8 @@ def _pairs_arrow_cross(c: DataFrame, b: DataFrame, threshold: float,
         })
         if not len(left) or not len(right):
             return empty
-        pc = _np_pair_rows(left.sort_values("id_a"), "__va", "id_a")
-        pb = _np_pair_rows(right.sort_values("id_b"), "__vb", "id_b")
+        pc = _np_pair_rows(left.sort_values(id_col), "__v", id_col)
+        pb = _np_pair_rows(right.sort_values(id_col), "__v", id_col)
         if pc is None or pb is None:
             return empty
         ids_c, Mc, nc = pc
@@ -1319,17 +1250,11 @@ def embedding_neardup(
     similarity.sign_lsh_bucket, or a SemDeDup cell) to turn it into a
     per-bucket join.
 
-    ``max_block_size`` (needs block_col) drops blocks holding more
-    rows BEFORE the self-join — the embedding family's member of the
-    hot-key caps every other pairing family has (max_band_bucket,
-    max_key_freq, max_frame_freq): one skewed block (boilerplate
-    embeddings all mapping to one cell/bucket) makes the within-block
-    join O(m²) at corpus scale; the cap bounds it at cap² pairs per
-    block. The recall trade is conservative for DEDUP: rows of a
-    dropped block emit no pairs, so they are all KEPT (never wrongly
-    dropped) — a mass-duplicated block that needs thinning anyway is
-    the exact-dedup stage's O(n) job upstream, same argument as
-    minhash's max_band_bucket. Default off.
+    ``max_block_size`` (needs block_col) is _blocked_pairs' cap: one
+    skewed block (boilerplate embeddings all mapping to one
+    cell/bucket) would make the within-block join O(m²) at corpus
+    scale; rows of a dropped block emit no pairs, so they are all KEPT.
+    Default off.
 
     ``impl``: "jvm" (default — pure Column expressions; the general-
     semantics path every SQL-oracled entry pins) or "arrow" (needs
@@ -1351,27 +1276,19 @@ def embedding_neardup(
         norm.alias("nrm"),
         *([F.col(block_col)] if block_col else []),
     )
-    if max_block_size is not None:
-        # persist+repartition: the capped frame feeds BOTH join sides
-        # and the frequency count on one (block-keyed) partitioning.
-        base = _drop_hot_keys(base, [block_col], max_block_size,
-                              persist=True, repartition=True)
-    evidence.record_blocking("embedding_blocked", base,
-                             [block_col] if block_col else [])
+    blocks = _blocked_pairs("embedding_blocked", base,
+                            [block_col] if block_col else [], id_col,
+                            cap=max_block_size)
     if impl == "arrow":
-        return _pairs_arrow_self(base, threshold, vec_col, id_col,
+        return _pairs_arrow_self(blocks.left, threshold, vec_col, id_col,
                                  block_col)
-    l, r = base.alias("l"), base.alias("r")
-    cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    if block_col:
-        cond = cond & (F.col(f"l.{block_col}") == F.col(f"r.{block_col}"))
     dot = F.aggregate(
         F.zip_with(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"), lambda x, y: x * y),
         F.lit(0.0),
         lambda a, x: a + x,
     )
     return (
-        l.join(r, cond)
+        blocks.join()
         .select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
@@ -1759,16 +1676,9 @@ def semantic_dedup_pairs_incremental(
     was already assigned for its in-batch self-check; otherwise
     ``new_df`` is assigned here.
 
-    ``check_disjoint=True`` verifies the corpus/batch id disjointness
-    invariant eagerly (limit-3 probe) instead of silently double-pairing
-    a replayed id — same contract as set_jaccard_pairs.
-
-    ``max_cell_size`` drops hot cells SYMMETRICALLY: the population is
-    counted on the CORPUS side (the unbounded one) and over-cap cells
-    are excluded from BOTH sides, so a batch row never pairs into a
-    cell the corpus no longer exposes — the same two-sided discipline
-    as set_jaccard_pairs' max_key_freq (r10 review: a one-sided drop
-    is silently inconsistent). Batch rows in a dropped cell are kept."""
+    ``check_disjoint`` and ``max_cell_size`` are _blocked_pairs' probe
+    and cross-form cap (counted on the corpus, dropped from both
+    sides). Batch rows in a dropped cell are kept."""
     if isinstance(centroids, dict):
         from coolplaydruid_spark import centroids as _cent
 
@@ -1813,60 +1723,39 @@ def semantic_dedup_pairs_incremental(
         expected = _cent.centroid_version(centroids, vec_col)
         _cent.check_version(corpus_cells, expected, "corpus_cells")
         _cent.check_version(batch_cells, expected, "batch_cells")
-    if check_disjoint:
-        overlap = (
-            corpus_cells.select(F.col(id_col))
-            .join(batch_cells.select(F.col(id_col)), on=id_col,
-                  how="left_semi")
-            .limit(3)
-            .collect()
-        )
-        if overlap:
-            raise ValueError(
-                "semantic_dedup_pairs_incremental: ids appear on BOTH "
-                f"sides (e.g. {[r[id_col] for r in overlap]}) — corpus "
-                "and batch ids must be disjoint")
-
-    def prep(frame, alias):
+    def prep(frame):
         dv = F.col(vec_col).cast("array<double>")
         return frame.select(
-            F.col(id_col).alias(f"id_{alias}"),
-            dv.alias(f"__v{alias}"),
+            F.col(id_col),
+            dv.alias("__v"),
             F.sqrt(F.aggregate(dv, F.lit(0.0), lambda a, x: a + x * x))
-            .alias(f"__n{alias}"),
+            .alias("__n"),
             F.col("__cell"),
         )
 
-    c = prep(corpus_cells, "a")
-    b = prep(batch_cells, "b")
-    if max_cell_size is not None:
-        hot = (
-            c.groupBy("__cell")
-            .agg(F.count(F.lit(1)).alias("__hot_n"))
-            .where(F.col("__hot_n") > int(max_cell_size))
-            .select("__cell")
-        )
-        c = c.join(F.broadcast(hot), on="__cell", how="left_anti")
-        b = b.join(F.broadcast(hot), on="__cell", how="left_anti")
-    evidence.record_blocking("semantic_cells_cross", c, ["__cell"], right=b)
+    blocks = _blocked_pairs("semantic_cells_cross", prep(corpus_cells),
+                            ["__cell"], id_col, right=prep(batch_cells),
+                            cap=max_cell_size, check_disjoint=check_disjoint)
     if impl == "arrow":
         # One gemm per co-cell group (guide §4.2) — the r14 100 TB path
         # for the replay-validated scaled entries; SQL-oracled forms
         # keep the JVM fold below (embedding_neardup's impl doc).
         id_type = corpus_cells.schema[id_col].dataType.simpleString()
-        return _pairs_arrow_cross(c, b, threshold, id_type)
+        return _pairs_arrow_cross(blocks.left, blocks.right, threshold,
+                                  id_col, id_type)
     if impl != "jvm":
         raise ValueError(f"impl must be jvm|arrow, got {impl!r}")
     dot = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda x, y: x * y),
+        F.zip_with(F.col("l.__v"), F.col("r.__v"), lambda x, y: x * y),
         F.lit(0.0),
         lambda a, x: a + x,
     )
     return (
-        c.join(b, on="__cell")
+        blocks.join()
         .select(
-            "id_a", "id_b",
-            F.round(dot / (F.col("__na") * F.col("__nb")), 6).alias("cosine"),
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            F.round(dot / (F.col("l.__n") * F.col("r.__n")), 6).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
     )

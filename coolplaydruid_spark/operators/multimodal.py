@@ -779,12 +779,10 @@ def video_neardup_incremental(
     """Video near-dup pairs between an incoming batch and the existing
     corpus — the same daily-ingest contract as the other modalities
     (corpus never self-pairs; pre-materialized signatures skip the
-    sampling; ids unique across the union, ``check_disjoint=True``
-    verifies and raises like the phash/audio siblings). Returns
-    (media_id_a = corpus id, media_id_b = batch id, jaccard ≥
-    threshold). The stop-frame cap is COUNTED on the corpus side (the
-    unbounded one) but applied to both sides, keeping the Jaccard
-    self-consistent (set_jaccard_pairs)."""
+    sampling). Returns (media_id_a = corpus id, media_id_b = batch id,
+    jaccard ≥ threshold). ``check_disjoint`` and the stop-frame cap
+    ``max_frame_freq`` are dedup._blocked_pairs' probe and cross-form
+    cap."""
     from coolplaydruid_spark.operators.dedup import set_jaccard_pairs
 
     corpus_sig = corpus_signatures if corpus_signatures is not None else (

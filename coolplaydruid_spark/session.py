@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, at most 24g, at least 1g. Local mode
+    hosts every executor thread inside the driver JVM, so its heap is
+    the whole engine's; half of MemTotal leaves room for the JVM's
+    off-heap memory, the Python workers and the page cache the Parquet
+    scans rely on. A fixed 24g on a 16 GiB host let the heap grow until
+    the kernel OOM-killed the JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1, min(24, kib // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "coolplaydruid_spark",
     master: str | None = None,
@@ -28,10 +44,11 @@ def get_spark(
         .appName(app_name)
         # Local mode hosts all executor threads inside the driver JVM —
         # Spark's 1g default heap dies with GCLocker alloc failures on
-        # multi-GB shuffles. Sized for the 128 GiB bench host; applies
-        # only when this factory creates the JVM (a driver-owned session
-        # keeps its own sizing).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # multi-GB shuffles. Sized from the host (_default_driver_memory);
+        # applies only when this factory creates the JVM (a driver-owned
+        # session keeps its own sizing).
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

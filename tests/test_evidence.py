@@ -40,6 +40,17 @@ def test_cross_join_counts_nl_times_nr_per_bucket(spark):
     assert st["blocked_rows"] == 7
 
 
+def test_weight_counts_the_items_a_row_stands_for(spark):
+    # two representative rows standing for 3 + 1 items in one bucket
+    # count as the 4 items per-item blocking would see: C(4, 2) = 6
+    df = _df(spark, [("a", 1, 3), ("a", 2, 1), ("b", 3, 1)],
+             ["k", "id", "w"])
+    with evidence.capture() as sink:
+        evidence.record_blocking("w", df, ["k"], weight="w")
+    st = evidence.candidate_stats(sink)
+    assert st["candidate_pairs"] == 6 and st["blocked_rows"] == 5
+
+
 def test_empty_keys_is_one_global_block(spark):
     df = _df(spark, [(i,) for i in range(5)], ["id"])
     with evidence.capture() as sink:

@@ -62,6 +62,10 @@ LINEAR = {
     # shingle-keyed pair join after the distinct is bounded per key by
     # the GROUP count, so it can never go quadratic in the corpus.
     "corpus_overlap_matrix", "corpus_overlap_incremental",
+    # Gopher duplicated-n-gram stats: per-document NumPy kernel behind
+    # util.spread()'s parallelism-floor repartition (~input) and the
+    # result delivery — no pair or gram exchange
+    "text_dup_ngram_stats",
 }
 # BLOCKED gate (rewritten r14, r13 verdict #1): the gate used to ratio
 # raw shuffle_write_records, a PLAN property — AQE's broadcast-vs-

@@ -227,6 +227,63 @@ def test_result_cache_hits_and_invalidates(engine, spark, tmp_path):
     assert third == first
 
 
+def test_result_cache_rekeys_on_reregistration_after_append(engine, spark,
+                                                          tmp_path):
+    """The ETag fingerprints the files the REGISTERED frame reads. A read
+    between an append and the re-registration sees the registered
+    snapshot and must not cache it under a key that claims the appended
+    files — the read after re-registration returns the fresh count."""
+    from coolplaydruid_spark.sources import batch
+    from tests.conftest import SF_DIR
+
+    dest = str(tmp_path / "ingested")
+    src = {"format": "parquet", "path": f"{SF_DIR}/events.parquet"}
+    batch.index_task(spark, src, dest, time_column="ts")
+    batch.register_ingested(engine.catalog, "ingest_cache_tbl", dest, "ts")
+    q = {
+        "queryType": "timeseries", "dataSource": "ingest_cache_tbl",
+        "granularity": "all",
+        "aggregations": [{"type": "count", "name": "n"}],
+        "intervals": ["2000-01-01T00:00:00/2100-01-01T00:00:00"],
+    }
+    n0 = engine.execute(q)[0]["result"]["n"]
+    assert n0 > 0
+    batch.append_task(spark, src, dest, time_column="ts")
+    assert engine.execute(q)[0]["result"]["n"] == n0
+    batch.register_ingested(engine.catalog, "ingest_cache_tbl", dest, "ts")
+    assert engine.execute(q)[0]["result"]["n"] == 2 * n0
+
+
+def test_result_cache_eviction_is_thread_safe(spark, catalog):
+    """Full-cache inserts from many handler threads: with a one-entry
+    cache every populate evicts, and no query that succeeded may fail
+    in the eviction, while the bound holds."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from coolplaydruid_spark.engine import DruidEngine
+
+    eng = DruidEngine(spark, catalog, result_cache_entries=1)
+    queries = [{
+        "queryType": "timeseries", "dataSource": "events",
+        "granularity": "all",
+        "aggregations": [{"type": "count", "name": "n"}],
+        "intervals": [f"2024-01-{d:02d}T00:00:00/2024-01-{d + 1:02d}T00:00:00"],
+    } for d in range(1, 13)] * 4
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(eng.execute, queries))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(eng._result_cache) <= 1
+    by_query = {}
+    for q, r in zip(queries, results):
+        by_query.setdefault(q["intervals"][0], set()).add(r[0]["result"]["n"])
+    assert all(len(v) == 1 for v in by_query.values())
+
+
 def test_max_results_resource_limit(engine):
     """context.maxResults enforces the reference's groupBy resource
     limit (query-module-overview.md:86): overflow fails with the

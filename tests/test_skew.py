@@ -142,7 +142,8 @@ def test_minhash_band_bucket_cap_bounds_hot_bucket(spark):
         banded.groupBy("band", "bh").count().agg(F.max("count")).collect()[0][0]
     )
     assert hottest > 50, "fixture failed to produce a hot bucket"
-    capped = dedup._cap_band_buckets(banded, 50)
+    capped = dedup._blocked_pairs("minhash_lsh_bands", banded, ["band", "bh"],
+                                  "doc_id", cap=50).left
     capped_max = (
         capped.groupBy("band", "bh").count().agg(F.max("count")).collect()[0][0]
     )
